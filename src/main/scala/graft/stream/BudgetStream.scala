@@ -1,9 +1,9 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.{PretrainOps, TextOps}
 
@@ -22,25 +22,18 @@ import graft.ops.{PretrainOps, TextOps}
   * source crosses the budget it stays closed — admission is a prefix of
   * the admission order, exactly like the batch prefix.
   *
-  * State is the [[SampleStream.runMixture]] discipline, not a state
-  * store: per-source seen-token totals are a sources-sized parquet
-  * table versioned per batch under `outDir/_totals/b_<id>`
-  * ([[VersionedState]]). A batch reads its predecessor's totals, decides
-  * from them + its own in-batch cumsum, and writes merged totals as its
-  * version — a REPLAYED batch re-reads the same predecessor and rewrites
-  * identical output (at-least-once idempotence). O(sources) state I/O
-  * per batch regardless of stream length.
+  * State is not a state store: per-source seen-token totals are a
+  * sources-sized [[VersionedState]] snapshot store under
+  * `outDir/_totals`. A batch decides from its predecessor's totals plus
+  * its own in-batch cumsum, then writes the merged totals as its
+  * version — O(sources) state I/O per batch regardless of stream length.
   *
   * Emits EVERY incoming doc with its decision (`admit`, `cum_before`) —
   * the audit superset of the batch operator's admitted-only output.
   */
 object BudgetStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)
-  ))
+  val docSchema: StructType = StreamQuery.sourcedDocSchema
 
   /** In-batch order: a micro-batch is a SET of file rows with no
     * inherent arrival order, so inside a batch the stream uses the
@@ -52,40 +45,28 @@ object BudgetStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-budget-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val totalsRoot = s"$outDir/_totals"
-        val prior = VersionedState.latestBefore(spark, totalsRoot, batchId)
-          .map(spark.read.parquet(_))
-
-        import org.apache.spark.sql.expressions.Window
-        val inBatch = Window.partitionBy("source").orderBy("bucket", "doc_id")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val t = batch.select(col("doc_id"), col("source"),
-            size(TextOps.toksOf(batch)).cast("long").as("n_tok"),
-            pmod(TextOps.tokenHash(
-              concat(lit("budget:"), col("doc_id").cast("string"))),
-              lit(PretrainOps.BudgetBuckets)).as("bucket"))
-          .withColumn("batch_cum",
-            coalesce(sum(col("n_tok")).over(inBatch), lit(0L)))
+    StreamQuery.batches(StreamQuery.files(spark, docSchema, docsDir),
+        "budget-stream", checkpointDir, trigger) { (batch, batchId) =>
+      import org.apache.spark.sql.expressions.Window
+      val inBatch = Window.partitionBy("source").orderBy("bucket", "doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val t = batch.select(col("doc_id"), col("source"),
+          size(TextOps.toksOf(batch)).cast("long").as("n_tok"),
+          pmod(TextOps.tokenHash(
+            concat(lit("budget:"), col("doc_id").cast("string"))),
+            lit(PretrainOps.BudgetBuckets)).as("bucket"))
+        .withColumn("batch_cum",
+          coalesce(sum(col("n_tok")).over(inBatch), lit(0L)))
+      VersionedState.fold(spark, s"$outDir/_totals", batchId) { prior =>
         val withPrior = prior.fold(t.withColumn("seen_tokens", lit(0L)))(p =>
           t.join(broadcast(p), Seq("source"), "left")
             .withColumn("seen_tokens", coalesce(col("seen_tokens"), lit(0L))))
-
         withPrior
           .withColumn("cum_before", col("seen_tokens") + col("batch_cum"))
           .select(col("doc_id"), col("source"), col("n_tok"), col("cum_before"),
             (col("cum_before") < PretrainOps.TokenBudget).as("admit"))
           .withColumn("batch_id", lit(batchId))
           .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-
         // merged totals AFTER the decision write: a replay that died
         // between the two writes re-reads the same predecessor version
         // and reproduces both outputs byte-identically. Totals reduce
@@ -93,12 +74,10 @@ object BudgetStream {
         // one tokenization pass — review round-9)
         val batchTotals = t.groupBy("source")
           .agg(sum("n_tok").as("seen_tokens"))
-        val merged = prior.fold(batchTotals)(p =>
+        prior.fold(batchTotals)(p =>
           p.unionByName(batchTotals).groupBy("source")
             .agg(sum("seen_tokens").as("seen_tokens")))
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(totalsRoot, batchId))
-        ()
+          .coalesce(1)
       }
-      .start()
+    }.start()
 }

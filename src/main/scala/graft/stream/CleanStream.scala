@@ -16,12 +16,10 @@ import graft.ops.{CorpusOps, DedupOps, PretrainOps, TextOps}
   * corpus and a per-doc filter-reasons audit row (the rejection-rate
   * dashboard feed every production ingest emits).
   *
-  * Cross-batch dedup state is the versioned-parquet pattern of
-  * [[SampleStream.runMixture]], but APPEND-ONLY DELTAS: `_hashes/b_<id>`
-  * holds only batch `<id>`'s NEW content hashes (first occurrences that
-  * passed the gates), and a batch's membership check reads the union of
-  * deltas with id < its own — so a REPLAYED batch never sees its own
-  * partial write (the EsBulkSink idempotence contract), total state I/O
+  * Cross-batch dedup state is a [[VersionedState]] DELTA store:
+  * `_hashes/b_<id>` holds only batch `<id>`'s NEW content hashes (first
+  * occurrences that passed the gates) and a batch's membership check
+  * reads the union of the deltas below its own id — total state I/O
   * stays linear in distinct content, and a restart resumes from the
   * deltas with no state-store recovery. At 100 TB the deltas compact
   * into the bucketed signature layout ([[graft.ops.BucketedLayout]]) and
@@ -53,11 +51,7 @@ object CleanStream {
       checkpointDir: String,
       benchGrams: Option[DataFrame] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    runFrom(spark,
-      spark.readStream
-        .schema(DedupStream.docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docsDir),
+    runFrom(spark, StreamQuery.files(spark, DedupStream.docSchema, docsDir),
       outDir, checkpointDir, benchGrams, trigger)
 
   /** [[run]] over ANY streaming document source (file arrival, the
@@ -75,12 +69,8 @@ object CleanStream {
       benchGrams: Option[DataFrame] = None,
       trigger: Trigger = Trigger.AvailableNow(),
       onSurvivors: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
-    source
-      .writeStream
-      .queryName(s"graft-clean-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamQuery.batches(source, "clean-stream", checkpointDir, trigger) {
+      (batch, batchId) =>
         val hashesRoot = s"$outDir/_hashes"
         val priorDirs = VersionedState.allBefore(spark, hashesRoot, batchId)
         val prior =
@@ -161,7 +151,5 @@ object CleanStream {
             .coalesce(1).write.mode("overwrite")
             .parquet(VersionedState.versionDir(hashesRoot, batchId))
         } finally { base.unpersist(); () }
-        ()
-      }
-      .start()
+    }.start()
 }

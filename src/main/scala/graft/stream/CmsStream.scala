@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 import graft.ops.PretrainOps
@@ -17,12 +17,9 @@ import graft.ops.PretrainOps
   * regardless of stream age or vocabulary size.
   *
   * Replay safety: SUM is NOT idempotent (unlike [[HllStream]]'s max),
-  * so correctness rests on the [[VersionedState]] versioning argument
-  * alone — the [[ManifestStream]] discipline: a batch reads only
-  * versions strictly below its own id and OVERWRITES its own version,
-  * so a replayed batch re-derives `b_<id>` from the same prior state
-  * and the same input, byte-identical (the spec replays one and asserts
-  * the counters are unchanged and still equal the batch sketch).
+  * so correctness rests on the [[VersionedState]] contract alone (the
+  * spec replays a batch and asserts the counters are unchanged and
+  * still equal the batch sketch).
   *
   * The query face is [[estimate]]: resolve the newest version, point-
   * query it ([[graft.ops.PretrainOps.cmsPointQuery]] — estimate ≥ true
@@ -31,42 +28,23 @@ import graft.ops.PretrainOps
   */
 object CmsStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)))
+  val docSchema: StructType = StreamQuery.sourcedDocSchema
 
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-cms-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_counters"
+    StreamQuery.batches(StreamQuery.files(spark, docSchema, docsDir),
+        "cms-stream", checkpointDir, trigger) { (batch, batchId) =>
+      VersionedState.fold(spark, s"$outDir/_counters", batchId) { prior =>
         val mine = PretrainOps.cmsCounters(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) => mine.unionByName(spark.read.parquet(prev))
-            .groupBy("r", "b").agg(sum("c").as("c"))
-          case None => mine
-        }
-        merged.write.mode("overwrite").parquet(s"$root/b_$batchId")
-        ()
+        prior.fold(mine)(p => mine.unionByName(p)
+          .groupBy("r", "b").agg(sum("c").as("c")))
       }
-      .start()
+    }.start()
 
   /** Point-query the newest published counter state for `tokens`. */
   def estimate(spark: SparkSession, outDir: String,
-      tokens: Seq[String]): DataFrame = {
-    val root = s"$outDir/_counters"
-    val latest = VersionedState
-      .latestBefore(spark, root, Long.MaxValue)
-      .getOrElse(sys.error(s"CmsStream.estimate: no counter state under $root"))
-    PretrainOps.cmsPointQuery(spark.read.parquet(latest), tokens)
-  }
+      tokens: Seq[String]): DataFrame =
+    PretrainOps.cmsPointQuery(VersionedState.latest(spark,
+      s"$outDir/_counters", "CmsStream.estimate"), tokens)
 }

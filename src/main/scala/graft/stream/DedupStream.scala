@@ -35,18 +35,11 @@ object DedupStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .withColumn("content_hash", contentHash)
-      .dropDuplicates("content_hash")
-      .writeStream
-      .queryName(s"graft-dedup-stream-${QueryNames.suffix(checkpointDir)}")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
+    StreamQuery.writer(StreamQuery.files(spark, docSchema, docsDir)
+        .withColumn("content_hash", contentHash)
+        .dropDuplicates("content_hash"),
+        "dedup-stream", checkpointDir, trigger)
       .option("path", outDir)
-      .trigger(trigger)
       .format("parquet")
       .start()
 
@@ -71,29 +64,20 @@ object DedupStream {
   def runIncrementalDedup(spark: SparkSession, docsDir: String,
       historyDocs: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-incremental-dedup-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // cacheIncoming=false: a per-batch cache entry would accumulate
-        // for the life of the query (each batch is a fresh plan); the
-        // history side still caches once (same plan every batch).
-        // Per-batch dir + overwrite, NOT blind append to outDir: a
-        // replayed micro-batch (crash between sink write and checkpoint
-        // commit) must clobber its own partial output, not duplicate
-        // every row of the batch — the same at-least-once idempotence
-        // contract as EsBulkSink.writeBatch
-        graft.ops.DedupOps.dedupAgainstIndex(batch, historyDocs,
-            cacheIncoming = false)
-          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    StreamQuery.batches(StreamQuery.files(spark, docSchema, docsDir),
+        "incremental-dedup-stream", checkpointDir, trigger) { (batch, batchId) =>
+      // cacheIncoming=false: a per-batch cache entry would accumulate
+      // for the life of the query (each batch is a fresh plan); the
+      // history side still caches once (same plan every batch).
+      // Per-batch dir + overwrite, NOT blind append to outDir: a
+      // replayed micro-batch (crash between sink write and checkpoint
+      // commit) must clobber its own partial output, not duplicate
+      // every row of the batch — the same at-least-once idempotence
+      // contract as EsBulkSink.writeBatch
+      graft.ops.DedupOps.dedupAgainstIndex(batch, historyDocs,
+          cacheIncoming = false)
+        .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }.start()
 
   /** Streaming decontamination: continuously-arriving documents are
     * checked against a STATIC benchmark corpus via a stream-static
@@ -126,26 +110,22 @@ object DedupStream {
       .distinct()
       .cache()
     val benchGrams = broadcast(benchGramsCached)
-    val query = try spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .select(col("doc_id"),
-        sorted_distinct(word_shingle_hashes(tokens(col("text")),
-          PretrainOps.DecontamGram)).as("gs"))
-      // outer + null filter (vs inferred size(gs)>0 pushdown re-computing
-      // the gram sketch at the scan — see DedupOps.minhashSignature)
-      .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
-        explode_outer(col("gs")).as("g"))
-      .filter(col("g").isNotNull)
-      .writeStream
-      .queryName(s"graft-decontaminate-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
+    StreamQuery.withStatics(spark, benchGramsCached) {
+      val grams = StreamQuery.files(spark, docSchema, docsDir)
+        .select(col("doc_id"),
+          sorted_distinct(word_shingle_hashes(tokens(col("text")),
+            PretrainOps.DecontamGram)).as("gs"))
+        // outer + null filter (vs inferred size(gs)>0 pushdown re-computing
+        // the gram sketch at the scan — see DedupOps.minhashSignature)
+        .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
+          explode_outer(col("gs")).as("g"))
+        .filter(col("g").isNotNull)
       // join + per-doc agg run INSIDE the micro-batch: a doc's grams all
       // arrive in one batch (file granularity), so a streaming groupBy
       // would only add a state store keyed by every doc ever seen —
       // stateless foreachBatch keeps the query scan-bound
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      StreamQuery.batches(grams, "decontaminate-stream", checkpointDir,
+          trigger) { (batch, batchId) =>
         batch.join(benchGrams, "g")
           .groupBy("doc_id", "n_grams")
           .agg(count(lit(1)).as("n_hits"))
@@ -154,21 +134,8 @@ object DedupStream {
           // per-batch dir + overwrite: replay-idempotent (see
           // runIncrementalDedup)
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch {
-      // a failed start() (bad checkpoint dir, schema error) would leak
-      // the cache the termination listener exists to free
-      case t: Throwable => benchGramsCached.unpersist(); throw t
+      }.start()
     }
-    // free the static-side cache when THIS query terminates: without it
-    // the cached gram table outlives the stopped query for the life of
-    // the SparkSession, accumulating executor memory across repeated
-    // stream runs (tests start the query twice per case)
-    unpersistOnTermination(spark, query, benchGramsCached)
-    query
   }
 
   /** Streaming incremental CONTAINMENT: each arriving micro-batch is
@@ -208,20 +175,15 @@ object DedupStream {
       hdf.filter(col("df") <= DedupOps.ContainFreqCap).select("g"), "g").cache()
     val stopGrams = hdf.filter(col("df") > DedupOps.ContainFreqCap)
       .select("g").cache()
-    def freeCaches(): Unit = { histIdx.unpersist(); stopGrams.unpersist(); () }
-    val query = try spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .select(col("doc_id").as("doc_a"),
-        PretrainOps.decontamGrams(DedupOps.ContainGramWords).as("gs"))
-      .select(col("doc_a"), size(col("gs")).cast("long").as("n_a"),
-        explode_outer(col("gs")).as("g"))
-      .filter(col("g").isNotNull)
-      .writeStream
-      .queryName(s"graft-containment-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamQuery.withStatics(spark, histIdx, stopGrams) {
+      val grams = StreamQuery.files(spark, docSchema, docsDir)
+        .select(col("doc_id").as("doc_a"),
+          PretrainOps.decontamGrams(DedupOps.ContainGramWords).as("gs"))
+        .select(col("doc_a"), size(col("gs")).cast("long").as("n_a"),
+          explode_outer(col("gs")).as("g"))
+        .filter(col("g").isNotNull)
+      StreamQuery.batches(grams, "containment-stream", checkpointDir,
+          trigger) { (batch, batchId) =>
         val capped = batch.join(stopGrams, "g")
           .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
         val out = batch.join(histIdx, "g")
@@ -238,14 +200,8 @@ object DedupStream {
         // per-batch dir + overwrite: replay-idempotent (see
         // runIncrementalDedup)
         out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch { case t: Throwable => freeCaches(); throw t }
-    unpersistOnTermination(spark, query, histIdx)
-    unpersistOnTermination(spark, query, stopGrams)
-    query
+      }.start()
+    }
   }
 
   /** Streaming incremental WINNOW dedup — the position-local overlap leg
@@ -292,19 +248,15 @@ object DedupStream {
       .cache()
     val stopFps = hdf.filter(col("df") > DedupOps.WinnowFreqCap)
       .select("fp").cache()
-    val query = try spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .select(col("doc_id").as("doc_a"),
-        DedupOps.winnowFingerprints(col("text")).as("fps"))
-      .select(col("doc_a"), size(col("fps")).cast("long").as("n_a"),
-        explode_outer(col("fps")).as("fp"))
-      .filter(col("fp").isNotNull)
-      .writeStream
-      .queryName(s"graft-winnow-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamQuery.withStatics(spark, histIdx, stopFps) {
+      val fps = StreamQuery.files(spark, docSchema, docsDir)
+        .select(col("doc_id").as("doc_a"),
+          DedupOps.winnowFingerprints(col("text")).as("fps"))
+        .select(col("doc_a"), size(col("fps")).cast("long").as("n_a"),
+          explode_outer(col("fps")).as("fp"))
+        .filter(col("fp").isNotNull)
+      StreamQuery.batches(fps, "winnow-stream", checkpointDir, trigger) {
+        (batch, batchId) =>
         val capped = batch.join(stopFps, "fp")
           .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
         val out = batch.join(histIdx, "fp")
@@ -321,16 +273,8 @@ object DedupStream {
         // per-batch dir + overwrite: replay-idempotent (see
         // runIncrementalDedup)
         out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch {
-      case t: Throwable => histIdx.unpersist(); stopFps.unpersist(); throw t
+      }.start()
     }
-    unpersistOnTermination(spark, query, histIdx)
-    unpersistOnTermination(spark, query, stopFps)
-    query
   }
 
   val embSchema: StructType = StructType(Seq(
@@ -381,14 +325,9 @@ object DedupStream {
       .select(col("cluster_id"), col("vec_id").as("vec_b"),
         col("emb_d").as("eb"), col("norm").as("nb"))
       .cache()
-    val query = try spark.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(embDir)
-      .writeStream
-      .queryName(s"graft-semantic-dedup-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamQuery.withStatics(spark, hist) {
+      StreamQuery.batches(StreamQuery.files(spark, embSchema, embDir),
+          "semantic-dedup-stream", checkpointDir, trigger) { (batch, batchId) =>
         val in = assigned(batch)
         val sims = in.join(hist, Seq("cluster_id"))
           .select(col("vec_id"), col("cluster_id"),
@@ -405,13 +344,8 @@ object DedupStream {
         // per-batch dir + overwrite: replay-idempotent (see
         // runIncrementalDedup)
         out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch { case t: Throwable => hist.unpersist(); throw t }
-    unpersistOnTermination(spark, query, hist)
-    query
+      }.start()
+    }
   }
 
   /** Binary-payload stream schema shared by the perceptual-hash legs. */
@@ -449,15 +383,10 @@ object DedupStream {
       .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
         col("band_idx"), col("band_val"))
       .cache()
-    val query = try spark.readStream
-      .schema(payloadSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir)
-      .transform(sigFn)
-      .writeStream
-      .queryName(s"graft-$nameTag-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamQuery.withStatics(spark, histIdx) {
+      StreamQuery.batches(StreamQuery.files(spark, payloadSchema, inDir)
+          .transform(sigFn), s"$nameTag-stream", checkpointDir, trigger) {
+        (batch, batchId) =>
         val out = banded(batch)
           .select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
             col("band_idx"), col("band_val"))
@@ -468,13 +397,8 @@ object DedupStream {
           .filter(col("hamming") <= DedupOps.MaxHamming)
           .distinct()
         out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch { case t: Throwable => histIdx.unpersist(); throw t }
-    unpersistOnTermination(spark, query, histIdx)
-    query
+      }.start()
+    }
   }
 
   /** Streaming incremental IMAGE dedup: [[runIncrementalHamming]] over
@@ -541,15 +465,10 @@ object DedupStream {
     val histCounts = histFrames.groupBy(col("doc_id").as("doc_b"))
       .agg(count(lit(1)).as("nf_b"))
       .cache()
-    val query = try spark.readStream
-      .schema(payloadSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(videosDir)
-      .transform(frames)
-      .writeStream
-      .queryName(s"graft-video-vote-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamQuery.withStatics(spark, histIdx, histCounts) {
+      StreamQuery.batches(StreamQuery.files(spark, payloadSchema, videosDir)
+          .transform(frames), "video-vote-stream", checkpointDir, trigger) {
+        (batch, batchId) =>
         val incCounts = batch.groupBy(col("doc_id").as("doc_a"))
           .agg(count(lit(1)).as("nf_a"))
         val out = banded(batch)
@@ -568,46 +487,7 @@ object DedupStream {
             least(col("nf_a"), col("nf_b")).as("min_frames"))
           .filter(col("n_matched") * VideoOps.MinFrameVote >= col("min_frames"))
         out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch {
-      case t: Throwable =>
-        histIdx.unpersist(); histCounts.unpersist(); throw t
-    }
-    unpersistOnTermination(spark, query, histIdx)
-    unpersistOnTermination(spark, query, histCounts)
-    query
-  }
-
-  /** Self-removing listener that unpersists `cached` once query `q`
-    * terminates — the streaming analog of a try/finally around a batch
-    * job's cache.
-    */
-  private def unpersistOnTermination(spark: SparkSession,
-      q: StreamingQuery, cached: DataFrame): Unit = {
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          cached.unpersist()
-          spark.streams.removeListener(this)
-          ()
-        }
-    }
-    spark.streams.addListener(listener)
-    // the terminated event can be dispatched BEFORE addListener completes
-    // (an AvailableNow query over an empty dir finishes in milliseconds)
-    // — if the query is already inactive the listener will never fire, so
-    // clean up here; a double fire is harmless (unpersist is idempotent,
-    // removeListener on a removed listener is a no-op)
-    if (!q.isActive) {
-      cached.unpersist()
-      spark.streams.removeListener(listener)
-      ()
+      }.start()
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.PretrainOps
 
@@ -30,34 +30,21 @@ import graft.ops.PretrainOps
   */
 object DriftStream {
 
-  val embSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)
-  ))
+  val embSchema: StructType = IndexStream.embSchema
 
   def run(spark: SparkSession, embDir: String, outDir: String,
       checkpointDir: String, refMicro: Map[Long, Long],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(embDir)
-      .writeStream
-      .queryName(s"graft-drift-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PretrainOps.embedDriftWith(batch, refMicro)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outDir/b_$batchId")
-        // publish AFTER the table is fully written: flip the pointer to
-        // the completed version (single small file, all-or-nothing) —
-        // readers resolving through `current` never observe a partial dir
-        publishLatest(spark, outDir, batchId)
-        ()
-      }
-      .start()
+    StreamQuery.batches(StreamQuery.files(spark, embSchema, embDir),
+        "drift-stream", checkpointDir, trigger) { (batch, batchId) =>
+      PretrainOps.embedDriftWith(batch, refMicro)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"$outDir/b_$batchId")
+      // publish AFTER the table is fully written: flip the pointer to
+      // the completed version (single small file, all-or-nothing) —
+      // readers resolving through `current` never observe a partial dir
+      publishLatest(spark, outDir, batchId)
+    }.start()
 
   /** Flip `outDir/_latest` to name `b_<batchId>` — rename with OVERWRITE
     * (one atomic op; POSIX rename / HDFS overwrite-rename), NOT

@@ -66,18 +66,10 @@ object GraphStream {
       centroids: Seq[IndexedSeq[Double]] = SimilarityOps.defaultCentroids,
       k: Int = SimilarityOps.KnnGraphK,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(IndexStream.embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(embDir)
-      .writeStream
-      .queryName(s"graft-knn-graph-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, outDir, centroids, k)
-      }
-      .start()
+    StreamQuery.batches(StreamQuery.files(spark, IndexStream.embSchema, embDir),
+        "knn-graph-stream", checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(spark, batch, batchId, outDir, centroids, k)
+    }.start()
 
   /** The streamed edge list, served exactly like the batch index dir
     * (`annGraphSearchIndexed(spark, GraphStream.edgesDir(outDir), …)`).

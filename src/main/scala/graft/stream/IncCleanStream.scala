@@ -20,9 +20,7 @@ import graft.ops.CorpusOps
   * candidates, verdicts — is maintained incrementally with the exact
   * promotion/demotion/cap-eviction semantics of the batch operator.
   *
-  * Two versioned stores ([[VersionedState]] discipline — a batch reads
-  * strictly below its own id and overwrites its own version, so
-  * replays are byte-stable):
+  * Two [[VersionedState]] snapshot stores, replay-stable by its contract:
   *
   *   - `_docs/b_<id>`: the FOLDED document snapshot as of this batch
   *     (prior snapshot patched by the batch's churn, tombstones folded
@@ -62,18 +60,10 @@ object IncCleanStream {
   def run(spark: SparkSession, changesDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(changeSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changesDir)
-      .writeStream
-      .queryName(s"graft-incclean-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, outDir)
-      }
-      .start()
+    StreamQuery.batches(StreamQuery.files(spark, changeSchema, changesDir),
+        "incclean-stream", checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(spark, batch, batchId, outDir)
+    }.start()
 
   private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, outDir: String): Unit = try {
@@ -187,10 +177,6 @@ object IncCleanStream {
     * version; identical to batch [[CorpusOps.cleanCorpus]] over the
     * folded document store (spec-asserted, across restarts).
     */
-  def currentClean(spark: SparkSession, outDir: String): DataFrame = {
-    val latest = VersionedState
-      .latestBefore(spark, s"$outDir/clean", Long.MaxValue)
-      .getOrElse(sys.error(s"IncCleanStream: no clean table under $outDir"))
-    spark.read.parquet(latest)
-  }
+  def currentClean(spark: SparkSession, outDir: String): DataFrame =
+    VersionedState.latest(spark, s"$outDir/clean", "IncCleanStream")
 }

@@ -74,25 +74,17 @@ object IndexStream {
   }
 
   private def startIndexStream(spark: SparkSession, embDir: String,
-      indexDir: String, checkpointDir: String, queryPrefix: String,
+      indexDir: String, checkpointDir: String, kind: String,
       trigger: Trigger,
       markerColumn: String,
       rows: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : StreamingQuery = {
     guardStreamedDir(spark, indexDir, markerColumn)
-    val batches = spark.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(embDir)
-    rows(batches)
-      .writeStream
-      .queryName(s"$queryPrefix-${QueryNames.suffix(checkpointDir)}")
-      .outputMode("append")
+    StreamQuery.writer(rows(StreamQuery.files(spark, embSchema, embDir)),
+        kind, checkpointDir, trigger)
       .format("parquet")
       .partitionBy("centroid")
       .option("path", indexDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
       .start()
   }
 
@@ -101,7 +93,7 @@ object IndexStream {
       centroids: Seq[IndexedSeq[Double]] = SimilarityOps.defaultCentroids,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     startIndexStream(spark, embDir, indexDir, checkpointDir,
-      "graft-ivf-index-stream", trigger, markerColumn = "emb_d",
+      "ivf-index-stream", trigger, markerColumn = "emb_d",
       SimilarityOps.ivfIndexRows(_, centroids))
 
   /** The IVFADC (PQ-coded) appender: identical exactly-once layout to
@@ -118,6 +110,6 @@ object IndexStream {
       codebook: Array[Double] = SimilarityOps.defaultPqCodebook,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     startIndexStream(spark, embDir, indexDir, checkpointDir,
-      "graft-ivfpq-index-stream", trigger, markerColumn = "codes",
+      "ivfpq-index-stream", trigger, markerColumn = "codes",
       SimilarityOps.ivfPqIndexRows(_, centroids, codebook))
 }

@@ -3,7 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.PretrainOps
 
@@ -21,25 +21,17 @@ import graft.ops.PretrainOps
   * [[graft.ops.PretrainOps.shardChecksums]] over everything ingested —
   * the convergence property the spec asserts across a mid-stream restart.
   *
-  * State is the [[SampleStream.runMixture]] pattern, deliberately: a
-  * shards-sized parquet table versioned per batch under
-  * `outDir/_manifest/b_<id>` (underscore-hidden from output globs). Each
-  * batch reads the newest version with id < its own, folds its per-batch
-  * manifest in, writes its version, and republishes `outDir/current` by
-  * overwrite — so a REPLAYED batch (crash between write and checkpoint
-  * commit) re-reads its predecessor's state, recomputes the identical
-  * fold, and overwrites its own partial output: the EsBulkSink
-  * at-least-once idempotence contract. At 100 TB the state is O(shards)
-  * — metadata-scale — while each batch's manifest build is one
-  * map-side-combined agg over just the new files.
+  * State is a shards-sized parquet snapshot store under
+  * `outDir/_manifest` ([[VersionedState]] — replay-safe although SUM is
+  * not idempotent); each batch folds its per-batch manifest in and
+  * republishes `outDir/current` by overwrite from the read-back
+  * version. At 100 TB the state is O(shards) — metadata-scale — while
+  * each batch's manifest build is one map-side-combined agg over just
+  * the new files.
   */
 object ManifestStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)
-  ))
+  val docSchema: StructType = StreamQuery.sourcedDocSchema
 
   /** Fold two manifests (or a manifest and a batch delta): counts add,
     * multiset checksums XOR. One definition point for the merge algebra.
@@ -52,27 +44,16 @@ object ManifestStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-manifest-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stateRoot = s"$outDir/_manifest"
-        val prior = VersionedState.latestBefore(spark, stateRoot, batchId)
-          .map(spark.read.parquet(_))
-        val delta = PretrainOps.shardChecksums(batch)
-        val merged = prior.fold(delta)(p => fold(p, delta))
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(stateRoot, batchId))
-        // publish the current manifest from the read-back snapshot —
-        // replay-idempotent overwrite, and readers never see a partial fold
-        spark.read.parquet(VersionedState.versionDir(stateRoot, batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/current")
-        ()
+    StreamQuery.batches(StreamQuery.files(spark, docSchema, docsDir),
+        "manifest-stream", checkpointDir, trigger) { (batch, batchId) =>
+      val written = VersionedState.fold(spark, s"$outDir/_manifest", batchId) {
+        prior =>
+          val delta = PretrainOps.shardChecksums(batch)
+          prior.fold(delta)(fold(_, delta)).coalesce(1)
       }
-      .start()
+      // publish the current manifest from the read-back snapshot —
+      // replay-idempotent overwrite, and readers never see a partial fold
+      spark.read.parquet(written)
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/current")
+    }.start()
 }

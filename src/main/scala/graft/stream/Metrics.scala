@@ -105,17 +105,25 @@ object Metrics {
     queryIds.clear()
   }
 
+  /** Whether a query name belongs to the CDC chain: the file-WAL
+    * pipeline ([[QueryNames.cdcPipeline]]) or the pgoutput capture
+    * stream ([[PgCaptureStream]]).
+    */
+  private def isCdc(queryName: String): Boolean =
+    queryName != null && (queryName.startsWith("graft-cdc-pipeline") ||
+      queryName.startsWith("graft-pgcapture-"))
+
   /** Streaming listener feeding the latency gauges from query progress.
-    * Filtered to the CDC pipeline's queries by name prefix: the listener
-    * is session-wide, so without the filter ANY other streaming query in
-    * the session (a DedupStream, a user's own query) would pollute the
-    * gauge map with non-CDC trigger durations. Within the prefix each
-    * query keeps its OWN gauge (keyed by full name) — two live connectors
-    * never overwrite each other.
+    * Filtered to the CDC chain's queries by name prefix ([[isCdc]]): the
+    * listener is session-wide, so without the filter ANY other streaming
+    * query in the session (a DedupStream, a user's own query) would
+    * pollute the gauge map with non-CDC trigger durations. Within the
+    * prefix each query keeps its OWN gauge (keyed by full name) — two
+    * live connectors never overwrite each other.
     */
   final class Listener extends StreamingQueryListener {
     override def onQueryStarted(event: QueryStartedEvent): Unit =
-      if (event.name != null && event.name.startsWith("graft-cdc-pipeline")) {
+      if (isCdc(event.name)) {
         queryIds.put(event.id, event.name)
         ()
       }
@@ -125,7 +133,7 @@ object Metrics {
     }
     override def onQueryProgress(event: QueryProgressEvent): Unit = {
       val p = event.progress
-      if (p.name != null && p.name.startsWith("graft-cdc-pipeline")) {
+      if (isCdc(p.name)) {
         recordProgress(p.name,
           Option(p.durationMs.get("triggerExecution")).map(_.longValue),
           Option(p.durationMs.get("addBatch")).map(_.longValue))

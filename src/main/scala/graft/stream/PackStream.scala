@@ -3,7 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.{PretrainOps, TextOps}
 
@@ -35,10 +35,7 @@ import graft.ops.{PretrainOps, TextOps}
   */
 object PackStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)))
+  val docSchema: StructType = StreamQuery.sourcedDocSchema
 
   private[stream] case class PackIn(doc_id: Long, source: Option[String],
       n_tokens: Long)
@@ -69,10 +66,7 @@ object PackStream {
 
   def packStream(spark: SparkSession, docsDir: String): DataFrame = {
     import spark.implicits._
-    val in = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
+    val in = StreamQuery.files(spark, docSchema, docsDir)
     in.select(col("doc_id"), col("source"),
         size(TextOps.toksOf(in)).cast("long").as("n_tokens"))
       .as[PackIn]
@@ -84,18 +78,12 @@ object PackStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    packStream(spark, docsDir).writeStream
-      .queryName(s"graft-pack-stream-${QueryNames.suffix(checkpointDir)}")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .start()
+    StreamQuery.batches(packStream(spark, docsDir), "pack-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/batch_$batchId")
+    }.start()
 
   /** The full streamed pack table so far: each doc packed exactly once
     * across the per-batch snapshots.

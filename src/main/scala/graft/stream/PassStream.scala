@@ -1,9 +1,9 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.PostTrainOps
 
@@ -12,17 +12,15 @@ import graft.ops.PostTrainOps
   * verified candidates: each micro-batch reduces to its own per-prompt
   * (n_candidates, n_passing) state ([[PostTrainOps.passState]] — two
   * SUMS, so shard/batch states merge into exactly the state of the
-  * union), SUM-merges it into the latest prior COMPACTED version (the
-  * [[CmsStream]] discipline), and publishes the estimator table from
+  * union), SUM-merges it into the latest prior COMPACTED version (a
+  * [[VersionedState]] snapshot store), and publishes the estimator table from
   * the merged state through the SHARED emission rule
   * ([[PostTrainOps.passFromState]]) — two faces, one reduction, one
   * emission, so they cannot drift.
   *
-  * Replay safety rests on the [[VersionedState]] argument (SUM is not
-  * idempotent): a batch reads only versions strictly below its own id
-  * and overwrites its own, so a replayed batch re-derives identical
-  * state and estimates. State is ≤ [[PostTrainOps.PassGroups]] rows of
-  * three longs at any corpus size — metadata-scale I/O per batch.
+  * Replay safety rests on the [[VersionedState]] contract (SUM is not
+  * idempotent). State is ≤ [[PostTrainOps.PassGroups]] rows of three
+  * longs at any corpus size — metadata-scale I/O per batch.
   *
   * The published estimate CONVERGES: after the final batch the state
   * equals [[PostTrainOps.passState]] of everything ingested, so the
@@ -32,38 +30,25 @@ import graft.ops.PostTrainOps
   */
 object PassStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)))
+  val docSchema: StructType = StreamQuery.sourcedDocSchema
 
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-pass-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_state"
-        val mine = PostTrainOps.passState(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) => mine.unionByName(spark.read.parquet(prev))
+    StreamQuery.batches(StreamQuery.files(spark, docSchema, docsDir),
+        "pass-stream", checkpointDir, trigger) { (batch, batchId) =>
+      val written = VersionedState.fold(spark, s"$outDir/_state", batchId) {
+        prior =>
+          val mine = PostTrainOps.passState(batch)
+          prior.fold(mine)(p => mine.unionByName(p)
             .groupBy("prompt_id")
             .agg(sum("n_candidates").as("n_candidates"),
-              sum("n_passing").as("n_passing"))
-          case None => mine
-        }
-        merged.coalesce(1).write.mode("overwrite").parquet(s"$root/b_$batchId")
-        // estimates from the read-back snapshot (stable under re-planning)
-        PostTrainOps.passFromState(spark.read.parquet(s"$root/b_$batchId"))
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
+              sum("n_passing").as("n_passing")))
+            .coalesce(1)
       }
-      .start()
+      // estimates from the read-back snapshot (stable under re-planning)
+      PostTrainOps.passFromState(spark.read.parquet(written))
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }.start()
 }

@@ -23,8 +23,7 @@ import graft.ops.PgOutputOps
   * metadata) after every batch; the next batch seeds
   * [[PgOutputOps.relationalize]] with those rows at `seq = -1`, exactly
   * as go-pq-cdc's in-memory relation cache persists across message
-  * reads. Replay-safe by the [[VersionedState]] contract (a batch reads
-  * strictly below its own id and overwrites its own version).
+  * reads. Replay-safe by the [[VersionedState]] contract.
   *
   * Malformed frames (decoder contract: `msg_type = "malformed"`, error
   * text in `msg_prefix`) dead-letter as parquet beside the action
@@ -44,19 +43,11 @@ object PgCaptureStream {
       deadLetterDir: String, checkpointDir: String,
       mapping: Map[String, String], concurrentRequest: Int = 2,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(captureSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(captureDir)
-      .writeStream
-      .queryName(s"graft-pgcapture-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, bulkOutDir, deadLetterDir,
-          mapping, concurrentRequest)
-      }
-      .start()
+    StreamQuery.batches(StreamQuery.files(spark, captureSchema, captureDir),
+        "pgcapture", checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(spark, batch, batchId, bulkOutDir, deadLetterDir,
+        mapping, concurrentRequest)
+    }.start()
 
   /** Opt-in per-stage wall prints to stderr (`spark.graft.pgcapture
     * .verbose=true`) — the first question about any slow batch, the

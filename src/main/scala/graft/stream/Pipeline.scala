@@ -286,20 +286,14 @@ object Pipeline {
       responseHandler: ResponseHandler,
       esMajor: Int = 8, typeName: String = "_doc",
       batchByteSizeLimit: Long = 0L, batchSizeLimit: Int = 0): StreamingQuery = {
-    registerMetrics(spark)
-    actions.writeStream
-      // checkpoint-derived suffix: two connectors in one session never
-      // collide; a restart of the same instance reuses the same name
-      .queryName(QueryNames.cdcPipeline(checkpointDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    // the name is QueryNames.cdcPipeline(checkpointDir): two connectors in
+    // one session never collide; a restart of the same instance reuses it
+    StreamQuery.batches(actions, "cdc-pipeline", checkpointDir, trigger) {
+      (batch, batchId) =>
         EsBulkSink.writeBatch(batch, batchId, bulkOutDir,
           responseHandler, concurrentRequest,
           esMajor, typeName, batchByteSizeLimit, batchSizeLimit)
-        ()
-      }
-      .start()
+    }.start()
   }
 
   /** The pipeline over the REAL HTTP transport ([[EsHttpClient]]): same
@@ -343,34 +337,20 @@ object Pipeline {
       case None => rh0
     }
     rh.onInit(spark, cfg)
-    registerMetrics(spark)
-    CdcOps.handlerActions(CdcOps.typedMessages(
+    val actions = CdcOps.handlerActions(CdcOps.typedMessages(
         changeStream(spark, eventsDir,
           maxBytesPerTrigger = cfg.es.maxBytesPerTriggerBytes)),
-      cfg.es.tableIndexMapping).writeStream
-      .queryName(QueryNames.cdcPipeline(checkpointDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger.getOrElse(
-        Trigger.ProcessingTime(cfg.es.batchTickerDuration.toMillis)))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      cfg.es.tableIndexMapping)
+    StreamQuery.batches(actions, "cdc-pipeline", checkpointDir,
+        trigger.getOrElse(
+          Trigger.ProcessingTime(cfg.es.batchTickerDuration.toMillis))) {
+      (batch, batchId) =>
         EsHttpSink.postBatch(batch, batchId, httpForTasks, rh,
           cfg.es.concurrentRequest, cfg.es.esMajorVersion,
           cfg.es.typeNameOrDefault, cfg.es.batchByteSizeLimitBytes,
           cfg.es.batchSizeLimit)
-        ()
-      }
-      .start()
+    }.start()
   }
-
-  // per-SESSION registration (weak: sessions must stay collectable), not a
-  // JVM-global one-shot — with the global flag only the FIRST session ever
-  // got a listener, and after it stopped every later session's gauges froze
-  private val metricsSessions = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-  private def registerMetrics(spark: SparkSession): Unit =
-    metricsSessions.synchronized {
-      if (metricsSessions.add(spark)) spark.streams.addListener(new Metrics.Listener)
-    }
 
   // ------------------------------------------------------ snapshot modes
 

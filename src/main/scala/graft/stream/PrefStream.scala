@@ -13,12 +13,10 @@ import graft.ops.PostTrainOps
   * micro-batches so the current DPO pair set is queryable at any time.
   *
   * State shape: ≤[[graft.ops.PostTrainOps.NumPromptGroups]] rows of
-  * six scalars, COMPACTED per batch under `outDir/_state/b_<id>` — the
-  * [[CmsStream]] versioned-state discipline. max/min merge is
-  * idempotent but the candidate COUNT sums, so replay safety rests on
-  * the [[VersionedState]] argument: a batch reads only versions
-  * strictly below its own id and overwrites its own, so a replayed
-  * batch re-derives `b_<id>` byte-identical (spec-asserted).
+  * six scalars, COMPACTED per batch under `outDir/_state/b_<id>` — a
+  * [[VersionedState]] snapshot store. max/min merge is idempotent but
+  * the candidate COUNT sums, so replay safety rests on that contract
+  * (spec-asserted byte-identical).
   *
   * The query face is [[pairs]]: resolve the newest state, apply the
   * SHARED emission rule ([[graft.ops.PostTrainOps.pairsFromState]] —
@@ -31,39 +29,27 @@ object PrefStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(CmsStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-pref-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_state"
+    StreamQuery.batches(
+        StreamQuery.files(spark, StreamQuery.sourcedDocSchema, docsDir),
+        "pref-stream", checkpointDir, trigger) { (batch, batchId) =>
+      VersionedState.fold(spark, s"$outDir/_state", batchId) { prior =>
         val mine = PostTrainOps.prefState(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) =>
-            PostTrainOps.mergePrefStates(mine, spark.read.parquet(prev))
-          case None => mine
-        }
-        merged.write.mode("overwrite").parquet(s"$root/b_$batchId")
-        // pair-hygiene index: each batch ALSO appends its docs' simhash
-        // signatures (doc_id, simhash — never text) as its own delta,
-        // the UrlStream append-only discipline: a replayed batch
-        // overwrites only its own version. The batch_id column makes the
-        // read-side fold deterministic when a doc_id is RE-ingested in a
-        // later batch (changed text → changed signature): latest batch
-        // wins, mirroring the doc-store fold — without it the two left
-        // joins in [[pairsNodup]] would fan each affected pair into
-        // duplicate rows and diverge from batch dpoPairsNodup
-        graft.ops.DedupOps.simhashSignature(batch)
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(s"$outDir/_sims", batchId))
-        ()
+        prior.fold(mine)(PostTrainOps.mergePrefStates(mine, _))
       }
-      .start()
+      // pair-hygiene index: each batch ALSO appends its docs' simhash
+      // signatures (doc_id, simhash — never text) as its own delta,
+      // the UrlStream append-only discipline: a replayed batch
+      // overwrites only its own version. The batch_id column makes the
+      // read-side fold deterministic when a doc_id is RE-ingested in a
+      // later batch (changed text → changed signature): latest batch
+      // wins, mirroring the doc-store fold — without it the two left
+      // joins in [[pairsNodup]] would fan each affected pair into
+      // duplicate rows and diverge from batch dpoPairsNodup
+      graft.ops.DedupOps.simhashSignature(batch)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(VersionedState.versionDir(s"$outDir/_sims", batchId))
+    }.start()
 
   /** Current DPO pairs over everything ingested so far. */
   def pairs(spark: SparkSession, outDir: String): DataFrame =
@@ -126,11 +112,6 @@ object PrefStream {
       docs: DataFrame): DataFrame =
     PostTrainOps.advantageAgainst(docs, latestState(spark, outDir))
 
-  private def latestState(spark: SparkSession, outDir: String): DataFrame = {
-    val root = s"$outDir/_state"
-    val latest = VersionedState
-      .latestBefore(spark, root, Long.MaxValue)
-      .getOrElse(sys.error(s"PrefStream: no state under $root"))
-    spark.read.parquet(latest)
-  }
+  private def latestState(spark: SparkSession, outDir: String): DataFrame =
+    VersionedState.latest(spark, s"$outDir/_state", "PrefStream")
 }

@@ -44,6 +44,10 @@ object QueryNames {
       .digest(canonical(checkpointDir).getBytes("UTF-8"))
       .take(6).map("%02x".format(_)).mkString
 
+  /** The name of every graft query: `graft-<kind>-<suffix>`. */
+  private[stream] def of(kind: String, checkpointDir: String): String =
+    s"graft-$kind-${suffix(checkpointDir)}"
+
   def cdcPipeline(checkpointDir: String): String =
-    s"graft-cdc-pipeline-${suffix(checkpointDir)}"
+    of("cdc-pipeline", checkpointDir)
 }

@@ -15,12 +15,12 @@ import graft.ops.SuffixOps
   * occurrences arrived in different batches is visible to the exact
   * instrument the moment the second one lands.
   *
-  * State discipline = [[HllStream]]'s compaction: one prior version
-  * read per batch (never the whole history), per-batch overwrite dirs
-  * for docs and arrays, a replayed batch reads only versions strictly
-  * below its id — so replays reproduce `b_<id>` exactly (the merge is
-  * deterministic). Restart resumes from the compacted state
-  * (spec-proven: post-restart array ≡ the direct build on the union).
+  * State discipline = [[HllStream]]'s compaction under the
+  * [[VersionedState]] contract (the merge is deterministic, so replays
+  * reproduce `b_<id>` exactly), except that `_sa` is never pruned:
+  * [[latestArray]] serves older versions by id. Restart resumes from
+  * the compacted state (spec-proven: post-restart array ≡ the direct
+  * build on the union).
   *
   * Cost honesty: the merge's global range-sort is O(total entries) per
   * batch — this is ExactSubstr's INDEX MAINTENANCE job, amortized in
@@ -36,44 +36,31 @@ object SaStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-sa-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val docsRoot = s"$outDir/_docs"
-          val saRoot = s"$outDir/_sa"
-          // idempotent corpus accumulation: this batch's docs land in
-          // their own overwrite dir, and the union of b_0..b_id IS the
-          // corpus through id
-          batch.write.mode("overwrite")
-            .parquet(VersionedState.versionDir(docsRoot, batchId))
-          // build the shard from the WRITTEN copy: truncated lineage,
-          // and replays re-read identical bytes
-          val batchDocs = spark.read.parquet(
-            VersionedState.versionDir(docsRoot, batchId))
-          val batchSa = SuffixOps.suffixArray(batchDocs)
-          val merged = VersionedState.latestBefore(spark, saRoot, batchId) match {
-            case Some(prev) =>
+    StreamQuery.batches(StreamQuery.files(spark, DedupStream.docSchema, docsDir),
+        "sa-stream", checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val docsRoot = s"$outDir/_docs"
+        // idempotent corpus accumulation: this batch's docs land in
+        // their own overwrite dir, and the union of b_0..b_id IS the
+        // corpus through id
+        batch.write.mode("overwrite")
+          .parquet(VersionedState.versionDir(docsRoot, batchId))
+        // build the shard from the WRITTEN copy: truncated lineage,
+        // and replays re-read identical bytes
+        val batchSa = SuffixOps.suffixArray(spark.read.parquet(
+          VersionedState.versionDir(docsRoot, batchId)))
+        VersionedState.fold(spark, s"$outDir/_sa", batchId, pruned = false) {
+          prior =>
+            prior.fold(batchSa) { prev =>
               val allDocs = VersionedState
                 .allBefore(spark, docsRoot, batchId + 1)
                 .map(spark.read.parquet(_))
                 .reduce(_ unionByName _)
-              SuffixOps.mergeShardArrays(
-                Seq(spark.read.parquet(prev), batchSa), allDocs)
-            case None => batchSa
-          }
-          merged.write.mode("overwrite")
-            .parquet(VersionedState.versionDir(saRoot, batchId))
+              SuffixOps.mergeShardArrays(Seq(prev, batchSa), allDocs)
+            }
         }
-        ()
       }
-      .start()
+    }.start()
 
   /** The newest compacted array at or below `batchId` (readers resolve
     * the published frontier the same way the stream itself does).

@@ -77,10 +77,7 @@ object SampleStream {
     */
   def reservoirStream(spark: SparkSession, docsDir: String): DataFrame = {
     import spark.implicits._
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
+    StreamQuery.files(spark, docSchema, docsDir)
       .withColumn("h",
         TextOps.tokenHash(concat(lit("resv:"), col("doc_id").cast("string"))))
       .select(col("doc_id"), col("lang"), col("source"), col("h"))
@@ -100,25 +97,15 @@ object SampleStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    reservoirStream(spark, docsDir).writeStream
-      .queryName(s"graft-reservoir-stream-${QueryNames.suffix(checkpointDir)}")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .start()
+    StreamQuery.batches(reservoirStream(spark, docsDir), "reservoir-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }.start()
 
   // ------------------------------------------------------ mixture stream
 
-  val mixSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)
-  ))
+  val mixSchema: StructType = StreamQuery.sourcedDocSchema
 
   /** Streaming domain-mixture admission — the continuous face of
     * [[PretrainOps.sampleMixture]]: each micro-batch's docs are admitted
@@ -132,56 +119,41 @@ object SampleStream {
     * batch operator's for its docs (spec-asserted).
     *
     * State is NOT a state store: the running totals are a sources-sized
-    * parquet table versioned per batch under `outDir/_totals/b_<id>`
-    * (underscore-hidden from output globs). Each batch reads the
-    * newest version with id < its own, merges its counts, and writes
-    * its version — so a REPLAYED batch (crash between sink write and
-    * checkpoint commit) re-reads its predecessor's totals, recomputes
-    * identical rates, and overwrites its own partial output: the same
-    * at-least-once idempotence contract as the EsBulkSink. This is the
-    * 100 TB shape for cross-key derived state too small to shard: the
-    * rate table is O(sources), so one metadata-scale read-modify-write
-    * per batch beats holding it hostage to per-key state semantics.
+    * [[VersionedState]] snapshot store under `outDir/_totals`
+    * (underscore-hidden from output globs), so a replayed batch
+    * recomputes identical rates. This is the 100 TB shape for cross-key
+    * derived state too small to shard: the rate table is O(sources), so
+    * one metadata-scale read-modify-write per batch beats holding it
+    * hostage to per-key state semantics.
     *
-    * Emits EVERY incoming doc with its decision (keep, keep_rate,
+  * Emits EVERY incoming doc with its decision (keep, keep_rate,
     * weight) — the audit-friendly superset of the batch operator's
     * kept-only output.
     */
   def runMixture(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(mixSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-mixture-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val totalsRoot = s"$outDir/_totals"
-        val prior = VersionedState.latestBefore(spark, totalsRoot, batchId)
-          .map(spark.read.parquet(_))
-        val batchStats = PretrainOps.mixTokenTotals(batch)
-        val merged = prior.fold(batchStats)(p =>
-          p.unionByName(batchStats).groupBy("source")
-            .agg(sum("src_tokens").as("src_tokens")))
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(totalsRoot, batchId))
-        // rates from the read-back snapshot (stable under re-planning),
-        // covering the batch's own tokens — the batch operator's algebra
-        val rates = PretrainOps.mixtureRates(
-          spark.read.parquet(VersionedState.versionDir(totalsRoot, batchId)))
-        batch.select(col("doc_id"), col("source"),
-            PretrainOps.mixBucket().as("bucket"))
-          .join(broadcast(rates), "source")
-          .select(col("doc_id"), col("source"), col("bucket"), col("keep_rate"),
-            (col("bucket") < col("keep_rate") * lit(PretrainOps.MixBuckets.toDouble))
-              .as("keep"),
-            (lit(1.0) / col("keep_rate")).as("weight"))
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
+    StreamQuery.batches(StreamQuery.files(spark, mixSchema, docsDir),
+        "mixture-stream", checkpointDir, trigger) { (batch, batchId) =>
+      val written = VersionedState.fold(spark, s"$outDir/_totals", batchId) {
+        prior =>
+          val batchStats = PretrainOps.mixTokenTotals(batch)
+          prior.fold(batchStats)(p =>
+            p.unionByName(batchStats).groupBy("source")
+              .agg(sum("src_tokens").as("src_tokens")))
+            .coalesce(1)
       }
-      .start()
+      // rates from the read-back snapshot (stable under re-planning),
+      // covering the batch's own tokens — the batch operator's algebra
+      val rates = PretrainOps.mixtureRates(spark.read.parquet(written))
+      batch.select(col("doc_id"), col("source"),
+          PretrainOps.mixBucket().as("bucket"))
+        .join(broadcast(rates), "source")
+        .select(col("doc_id"), col("source"), col("bucket"), col("keep_rate"),
+          (col("bucket") < col("keep_rate") * lit(PretrainOps.MixBuckets.toDouble))
+            .as("keep"),
+          (lit(1.0) / col("keep_rate")).as("weight"))
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }.start()
 }

@@ -21,7 +21,7 @@ import graft.ops.PretrainOps
   * cross-batch state: λ is immutable, so exactly-once needs only the
   * per-batch overwrite discipline — batch `id` writes `outDir/b_<id>`
   * with overwrite, and a replayed batch rewrites the identical rows
-  * (the [[CleanStream]] idempotence contract, minus the state reads).
+  * (the [[VersionedState]] overwrite rule, minus the state reads).
   * Downstream consumers union `b_*`; a [[graft.ops.PretrainOps
   * .dsirResample]]-shaped selection then runs batch-side over the
   * accumulated scores.
@@ -31,11 +31,7 @@ object ScoreStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String, lamMicro: Map[Long, Long],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    runFrom(spark,
-      spark.readStream
-        .schema(DedupStream.docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docsDir),
+    runFrom(spark, StreamQuery.files(spark, DedupStream.docSchema, docsDir),
       outDir, checkpointDir, lamMicro, trigger)
 
   /** [[run]] over ANY streaming document source mapped to the
@@ -44,16 +40,10 @@ object ScoreStream {
   def runFrom(spark: SparkSession, source: DataFrame, outDir: String,
       checkpointDir: String, lamMicro: Map[Long, Long],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source
-      .writeStream
-      .queryName(s"graft-score-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamQuery.batches(source, "score-stream", checkpointDir, trigger) {
+      (batch, batchId) =>
         PretrainOps.dsirWeightWith(batch, lamMicro)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite").parquet(s"$outDir/b_$batchId")
-        ()
-      }
-      .start()
+    }.start()
 }

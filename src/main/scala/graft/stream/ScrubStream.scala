@@ -9,8 +9,8 @@ import graft.ops.TextOps
 /** Streaming boilerplate-line accumulation — the live face of
   * [[graft.ops.TextOps.scrubBoilerplateLines]]'s document-frequency
   * index: each micro-batch APPENDS its per-line (hash, df-contribution)
-  * counts as a delta (`outDir/_linedf/b_<id>`, the [[CleanStream]]
-  * append-only-delta discipline — per-batch I/O is O(batch), never
+  * counts as a delta (`outDir/_linedf/b_<id>`, a [[VersionedState]]
+  * DELTA store — per-batch I/O is O(batch), never
   * O(distinct lines ever seen), which is what a compacted merge would
   * cost here because line vocabulary grows with the corpus). The
   * query face sums deltas; the ACTION face ([[scrubAgainst]]) applies
@@ -24,21 +24,12 @@ object ScrubStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(CmsStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-scrub-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_linedf"
-        TextOps.lineDfCounts(batch)
-          .write.mode("overwrite").parquet(s"$root/b_$batchId")
-        ()
-      }
-      .start()
+    StreamQuery.batches(
+        StreamQuery.files(spark, StreamQuery.sourcedDocSchema, docsDir),
+        "scrub-stream", checkpointDir, trigger) { (batch, batchId) =>
+      TextOps.lineDfCounts(batch).write.mode("overwrite")
+        .parquet(VersionedState.versionDir(s"$outDir/_linedf", batchId))
+    }.start()
 
   /** The accumulated line-df table over everything ingested. */
   def currentDf(spark: SparkSession, outDir: String): DataFrame = {

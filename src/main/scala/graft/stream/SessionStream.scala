@@ -138,12 +138,8 @@ object SessionStream {
   def run(spark: SparkSession, eventsDir: String, outDir: String,
       checkpointDir: String, delay: String = "0 seconds",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    closedSessions(spark, eventsDir, delay)
-      .writeStream
-      .queryName(s"graft-session-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
+    StreamQuery.writer(closedSessions(spark, eventsDir, delay),
+        "session-stream", checkpointDir, trigger)
       .format("parquet")
       .option("path", outDir)
       .start()

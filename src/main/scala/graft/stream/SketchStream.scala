@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.TextOps
 
@@ -19,51 +19,30 @@ import graft.ops.TextOps
   * a restart, not merely approximation-level agreement.
   *
   * State I/O per batch is O(cap · log n) rows per source regardless of
-  * stream age ([[VersionedState]] compacted-versioned discipline;
-  * replay-safe because compaction is idempotent given the same prior
-  * version and batch input).
+  * stream age; compaction is deterministic given the same prior version
+  * and batch input, so the [[VersionedState]] contract makes it
+  * replay-safe.
   */
 object SketchStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)))
+  val docSchema: StructType = StreamQuery.sourcedDocSchema
 
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-sketch-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_sketch"
-        val lv = TextOps.sketchLevels(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) =>
-            TextOps.sketchCompact(lv, Some(spark.read.parquet(prev)))
-          case None => TextOps.sketchCompact(lv, None)
-        }
-        merged.write.mode("overwrite").parquet(s"$root/b_$batchId")
-        ()
+    StreamQuery.batches(StreamQuery.files(spark, docSchema, docsDir),
+        "sketch-stream", checkpointDir, trigger) { (batch, batchId) =>
+      VersionedState.fold(spark, s"$outDir/_sketch", batchId) { prior =>
+        TextOps.sketchCompact(TextOps.sketchLevels(batch), prior)
       }
-      .start()
+    }.start()
 
   /** The query face: estimated percentile points per source from the
     * newest published state — identical output schema (and, by the merge
     * property, identical VALUES) to the batch operator over everything
     * ingested so far.
     */
-  def percentiles(spark: SparkSession, outDir: String): DataFrame = {
-    val root = s"$outDir/_sketch"
-    val latest = VersionedState
-      .latestBefore(spark, root, Long.MaxValue)
-      .getOrElse(sys.error(s"SketchStream.percentiles: no state under $root"))
-    TextOps.sketchPercentiles(spark.read.parquet(latest))
-  }
+  def percentiles(spark: SparkSession, outDir: String): DataFrame =
+    TextOps.sketchPercentiles(VersionedState.latest(spark,
+      s"$outDir/_sketch", "SketchStream.percentiles"))
 }

@@ -127,16 +127,10 @@ object StateMerge {
       rocksDb: Option[Boolean] = None): StreamingQuery = {
     rocksDb.foreach(on =>
       if (on) useRocksDbStateStore(spark) else useDefaultStateStore(spark))
-    upsertStream(spark, eventsDir).writeStream
-      .queryName(s"graft-script-update-${QueryNames.suffix(checkpointDir)}")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        encodeUpsert(batch, indexName)
-          .coalesce(1).write.mode("overwrite").text(s"$bulkOutDir/batch_$batchId")
-        ()
-      }
-      .start()
+    StreamQuery.batches(upsertStream(spark, eventsDir), "script-update",
+        checkpointDir, trigger) { (batch, batchId) =>
+      encodeUpsert(batch, indexName)
+        .coalesce(1).write.mode("overwrite").text(s"$bulkOutDir/batch_$batchId")
+    }.start()
   }
 }

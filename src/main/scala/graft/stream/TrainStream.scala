@@ -1,9 +1,8 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.TextOps
 
@@ -22,60 +21,41 @@ import graft.ops.TextOps
   * BY CONSTRUCTION the same fold as two sequential driver steps (the
   * spec asserts equality against that composition, across a restart).
   *
-  * State is the [[SampleStream.runMixture]]/[[ManifestStream]] pattern:
-  * the 1024-row weight vector versioned per batch under
-  * `outDir/_weights/b_<id>`; a batch reads the newest version with
-  * id < its own (a REPLAYED batch re-reads its predecessor, recomputes
-  * the identical step, overwrites its own partial write — at-least-once
-  * in, exactly-once out), and `outDir/current` republishes the newest
-  * weights for a serving-side [[graft.ops.TextOps.qualityLinearScoreWith]]
-  * to pick up. Unlike the manifest's XOR fold this one is ORDER-
-  * SENSITIVE (SGD), which is exactly why it must ride the checkpoint's
-  * serialized batch order rather than any associative merge.
+  * State is the 1024-row weight vector as a [[VersionedState]] snapshot
+  * store under `outDir/_weights` (a replayed batch re-reads its
+  * predecessor and recomputes the identical step — it cannot
+  * double-step), and `outDir/current` republishes the newest weights
+  * for a serving-side [[graft.ops.TextOps.qualityLinearScoreWith]] to
+  * pick up. Unlike the manifest's XOR fold this one is ORDER-SENSITIVE
+  * (SGD), which is exactly why it must ride the checkpoint's serialized
+  * batch order rather than any associative merge.
   */
 object TrainStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)
-  ))
+  val docSchema: StructType = StreamQuery.sourcedDocSchema
 
-  private def readWeights(spark: SparkSession, path: String): Map[Long, Long] = {
-    import spark.implicits._
-    spark.read.parquet(path).select("bucket", "w_micro")
-      .as[(Long, Long)].collect().toMap
-  }
+  private def weightsOf(state: DataFrame): Map[Long, Long] =
+    state.select("bucket", "w_micro").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-train-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import spark.implicits._
-        val stateRoot = s"$outDir/_weights"
-        val prior = VersionedState.latestBefore(spark, stateRoot, batchId)
-          .map(readWeights(spark, _))
-        val weights = prior.getOrElse(TextOps.seedWeightsMicro)
-        val grads = TextOps.qualityLinearTrainStepWith(batch, Some(weights))
-          .collect()
-          .map(r => r.getAs[Long]("bucket") -> r.getAs[Long]("grad_micro"))
-          .toSeq
-        val next = TextOps.applyGradient(weights, grads, batch.count())
-        next.toSeq.toDF("bucket", "w_micro")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(stateRoot, batchId))
-        // publish from the read-back snapshot — replay-idempotent overwrite
-        spark.read.parquet(VersionedState.versionDir(stateRoot, batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/current")
-        ()
+    StreamQuery.batches(StreamQuery.files(spark, docSchema, docsDir),
+        "train-stream", checkpointDir, trigger) { (batch, batchId) =>
+      import spark.implicits._
+      val written = VersionedState.fold(spark, s"$outDir/_weights", batchId) {
+        prior =>
+          val weights = prior.map(weightsOf).getOrElse(TextOps.seedWeightsMicro)
+          val grads = TextOps.qualityLinearTrainStepWith(batch, Some(weights))
+            .collect()
+            .map(r => r.getAs[Long]("bucket") -> r.getAs[Long]("grad_micro"))
+            .toSeq
+          TextOps.applyGradient(weights, grads, batch.count()).toSeq
+            .toDF("bucket", "w_micro").coalesce(1)
       }
-      .start()
+      // publish from the read-back snapshot — replay-idempotent overwrite
+      spark.read.parquet(written)
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/current")
+    }.start()
 }

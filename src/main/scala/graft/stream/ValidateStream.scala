@@ -13,9 +13,9 @@ import graft.ops.ProfileOps
   * at any time — the alarm a production ingest wires to paging, since
   * a violation discovered at training time is a cluster-day late.
   *
-  * Counts merge by SUM into compacted versioned state (the
-  * [[CmsStream]] discipline; replay-safe by the read-below-own-id
-  * rule). One honest caveat, stated rather than papered over:
+  * Counts merge by SUM into a [[VersionedState]] snapshot store
+  * (replay-safe by its contract although SUM is not idempotent). One
+  * honest caveat, stated rather than papered over:
   * `pk_unique` is counted WITHIN each batch — a duplicate key split
   * across two batches is invisible to this monitor (detecting it
   * exactly needs per-key state, which is [[DedupStream]]'s job — the
@@ -35,33 +35,16 @@ object ValidateStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-validate-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_rules"
+    StreamQuery.batches(StreamQuery.files(spark, docSchema, docsDir),
+        "validate-stream", checkpointDir, trigger) { (batch, batchId) =>
+      VersionedState.fold(spark, s"$outDir/_rules", batchId) { prior =>
         val mine = ProfileOps.validateCorpus(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) => mine.unionByName(spark.read.parquet(prev))
-            .groupBy("rule").agg(sum("n_violations").as("n_violations"))
-          case None => mine
-        }
-        merged.write.mode("overwrite").parquet(s"$root/b_$batchId")
-        ()
+        prior.fold(mine)(p => mine.unionByName(p)
+          .groupBy("rule").agg(sum("n_violations").as("n_violations")))
       }
-      .start()
+    }.start()
 
   /** The current running rule table over everything ever ingested. */
-  def current(spark: SparkSession, outDir: String): DataFrame = {
-    val root = s"$outDir/_rules"
-    val latest = VersionedState
-      .latestBefore(spark, root, Long.MaxValue)
-      .getOrElse(sys.error(s"ValidateStream.current: no state under $root"))
-    spark.read.parquet(latest)
-  }
+  def current(spark: SparkSession, outDir: String): DataFrame =
+    VersionedState.latest(spark, s"$outDir/_rules", "ValidateStream.current")
 }

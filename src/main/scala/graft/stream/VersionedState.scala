@@ -1,15 +1,39 @@
 package graft.stream
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The versioned-parquet streaming-state convention shared by
-  * [[SampleStream.runMixture]], [[ManifestStream]], [[TrainStream]] and
-  * [[CleanStream]]: per-batch state lands under `root/b_<batchId>`
-  * (overwrite = replay-safe), and a batch READS only versions with id
-  * strictly BELOW its own — a replayed batch must never see its own
-  * partial write. One definition of the lookup, so a fix to the
-  * replay-safety filter or the naming cannot miss a leg.
+/** The versioned-parquet streaming-state contract: a stream that carries
+  * state between micro-batches keeps it as parquet versions
+  * `root/b_<batchId>`, and every such store obeys three rules.
+  *
+  *   - READ BELOW: batch B reads only versions with id < B. A replayed
+  *     batch (crash between its write and the checkpoint commit) must
+  *     never see its own partial write.
+  *   - OVERWRITE: batch B writes exactly `b_B`, with overwrite. A replay
+  *     re-reads the same prior with the same input and rewrites the same
+  *     version — at-least-once in, effectively-once out, the contract of
+  *     the bulk sink's per-batch directories. This holds for folds that
+  *     are not idempotent (a SUM re-applied to its own output would
+  *     double-count), because a replay never reads its own output.
+  *   - PRUNE (snapshot stores): once `b_B` is durable, versions below the
+  *     one B read are unreachable — only the newest batch is ever
+  *     replayed, and it re-reads that prior — so a snapshot store holds
+  *     at most two versions.
+  *
+  * SNAPSHOT stores (each version is the whole fold through its batch;
+  * written by [[fold]], which prunes): CmsStream `_counters`, HllStream
+  * `_regs`, SketchStream `_sketch`, ValidateStream `_rules`, PassStream
+  * and PrefStream `_state`, ManifestStream `_manifest`, TrainStream
+  * `_weights`, BudgetStream and SampleStream.runMixture `_totals`;
+  * PgCaptureStream `_pgstate` and IncCleanStream `_docs`/`_state`/`clean`
+  * apply the same prune by hand. SaStream `_sa` is a snapshot store kept
+  * UNPRUNED: [[SaStream.latestArray]] serves older versions by id.
+  *
+  * DELTA stores (each version holds only its batch's additions; readers
+  * union [[allBefore]], so nothing is pruned): CleanStream `_hashes`,
+  * UrlStream `_seen`, PrefStream `_sims`, ScrubStream `_linedf`,
+  * SaStream `_docs`.
   */
 object VersionedState {
 
@@ -31,7 +55,7 @@ object VersionedState {
     idsBefore(spark, root, batchId).lastOption.map(j => s"$root/b_$j")
 
   /** Paths of ALL versions strictly before `batchId`, ascending — the
-    * append-only-delta variant ([[CleanStream]]'s hash deltas).
+    * delta-store read.
     */
   def allBefore(spark: SparkSession, root: String,
       batchId: Long): Seq[String] =
@@ -40,14 +64,32 @@ object VersionedState {
   /** The write-side path for this batch's version. */
   def versionDir(root: String, batchId: Long): String = s"$root/b_$batchId"
 
-  /** Compaction sweep for SNAPSHOT-per-version stores (each `b_<id>` is a
-    * full fold, not a delta): delete versions with id < `keepFrom`. A
-    * batch's replay reads only `latestBefore(id)`, so after batch B has
-    * durably written `b_B`, everything below B-1 is unreachable — B-1
-    * itself stays because Structured Streaming may replay batch B after
-    * a restart and re-read it. Deletion failures are swallowed: a
-    * leftover version is dead weight, never wrong (reads resolve by
-    * NEWEST id).
+  /** The newest version under `root` — the query face of a snapshot
+    * store. `owner` names the caller in the no-state error.
+    */
+  def latest(spark: SparkSession, root: String, owner: String): DataFrame =
+    spark.read.parquet(latestBefore(spark, root, Long.MaxValue)
+      .getOrElse(sys.error(s"$owner: no state under $root")))
+
+  /** One batch's step of a snapshot store: `step` gets the newest version
+    * below `batchId` (None on the first batch) and returns the new
+    * snapshot, which overwrites `b_<batchId>`; then the versions below the
+    * one read are pruned (`pruned = false` keeps them). Returns the
+    * written path, for read-back.
+    */
+  def fold(spark: SparkSession, root: String, batchId: Long,
+      pruned: Boolean = true)(step: Option[DataFrame] => DataFrame): String = {
+    val prior = idsBefore(spark, root, batchId).lastOption
+    val out = versionDir(root, batchId)
+    step(prior.map(id => spark.read.parquet(versionDir(root, id))))
+      .write.mode("overwrite").parquet(out)
+    if (pruned) prior.foreach(prune(spark, root, _))
+    out
+  }
+
+  /** Compaction sweep for a snapshot store: delete versions with id <
+    * `keepFrom`. Deletion failures are swallowed: a leftover version is
+    * dead weight, never wrong (reads resolve by NEWEST id).
     */
   def prune(spark: SparkSession, root: String, keepFrom: Long): Unit = {
     val rootPath = new Path(root)
